@@ -69,7 +69,3 @@ def srp_weight_sql(t_expr: str, p_expr: str, j_expr: str) -> str:
 def bit_of(col: Column, k: int) -> Column:
     """Bit k (0-based, LSB) of a long column — for SimHash planes."""
     return F.shiftright(col, k).bitwiseAND(F.lit(1))
-
-
-def bit_of_sql(expr: str, k: int) -> str:
-    return f"(({expr}) >> {k}) & 1"

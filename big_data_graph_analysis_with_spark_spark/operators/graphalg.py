@@ -27,12 +27,20 @@ reproduces results bit-for-bit:
   round is one edge join + one aggregation — the canonical Pregel-free
   PageRank; at scale, co-partition pr and edges on src to make the
   join shuffle-free.
+
+Materialization: a frame that one downstream job reads MORE THAN ONCE
+(self-joins, multi-branch summaries like `reciprocity`) is checkpointed
+eagerly, ``.localCheckpoint()`` — a lazily-marked RDD first touched by
+two branches of one job can be computed per branch before the block
+lands. A loop iterate whose first consumer references it once (the
+round's own probe, or the next round) is marked lazily,
+``.localCheckpoint(eager=False)``, so that consumer's job fills it and
+a round costs one driver action instead of two. Every iterative
+operator returns an eagerly checkpointed frame (or a projection of
+one), so a caller that branches on the result never re-runs the loop.
 """
 
 from __future__ import annotations
-
-import threading
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -45,141 +53,16 @@ PR_SCALE = 1_000_000_000_000
 PR_DAMP_NUM = 85
 PR_DAMP_DEN = 100
 
-#: below this vertex count an iterative operator narrows the session's
-#: shuffle width for the duration of its driver loop
-_NARROW_THRESHOLD = 100_000
-_NARROW_WIDTH = 8
-
-
-#: thread-local narrowing state — scoped to THIS operator call on THIS
-#: thread, never the session (round-10 verdict task 7: the previous
-#: conf set/restore narrowed every concurrent query that planned while
-#: an iterative operator's context was open)
-_NARROW_LOCAL = threading.local()
-
-
-@contextmanager
-def _narrow_shuffle(graph: NetGraph, n_vertices: int | None = None):
-    """Narrow the CHECKPOINT width of a driver round loop over a small
-    graph (same rationale as plans/pipeline: a stage-heavy fixpoint on
-    a sub-100k-vertex frame pays more in task scheduling at full width
-    than it gains in parallelism; AQE coalesces shuffle reads, but its
-    `parallelismFirst` floor keeps them at ~defaultParallelism pieces,
-    so checkpointed loop iterates would stay 32-wide and every
-    subsequent round schedules 32 tasks per stage on frames of a few
-    thousand rows).
-
-    Scoping: this no longer touches `spark.sql.shuffle.partitions` —
-    it arms a THREAD-LOCAL width that `_ckpt` (the loop-materialization
-    helper every operator here routes through) applies as a
-    `coalesce()` under each localCheckpoint. A concurrent query on the
-    same session is untouched; results are unaffected, all operators
-    here are partitioning-deterministic."""
-    n = n_vertices if n_vertices is not None else graph.vertices.count()
-    prev = getattr(_NARROW_LOCAL, "width", None)
-    # Arm OR DISARM explicitly: a nested call on a ≥-threshold graph
-    # inside an outer small-graph context must not inherit the outer
-    # narrow width, or _ckpt would coalesce edge-sized iterates of the
-    # big graph to _NARROW_WIDTH partitions (r11 advice). `prev` is
-    # still restored in `finally`, so the outer context is unaffected.
-    _NARROW_LOCAL.width = _NARROW_WIDTH if n < _NARROW_THRESHOLD else None
-    try:
-        yield n
-    finally:
-        _NARROW_LOCAL.width = prev
-
-
-def _ckpt(df: DataFrame) -> DataFrame:
-    """Materialize a shared frame EAGERLY: localCheckpoint, coalesced
-    to the armed narrow width when a `_narrow_shuffle` context is open
-    on this thread. The coalesce folds into the frame's final stage (no
-    extra shuffle) and fixes the checkpointed RDD's partition count, so
-    every later round reads/schedules `_NARROW_WIDTH` tasks instead of
-    the session's full width. Use via ``.transform(_ckpt)`` to keep
-    method chains.
-
-    Eager is the right shape for frames consumed MORE THAN ONCE inside
-    a single downstream job (self-joins, multi-branch summaries like
-    `reciprocity`): a lazily-marked RDD first touched by two branches
-    of one job can be computed per branch before the block lands. Loop
-    iterates whose very next action is their own probe use
-    `_ckpt_lazy` instead."""
-    w = getattr(_NARROW_LOCAL, "width", None)
-    return (df.coalesce(w) if w else df).localCheckpoint()
-
-
-def _ckpt_lazy(df: DataFrame) -> DataFrame:
-    """`_ckpt` for LOOP ITERATES: the checkpoint is lazy, so the
-    round's own probe action (`_empty`, the convergence sum) — or, in
-    probe-less fixed-iteration loops, the next round's single consumer
-    — is the job that fills it. Each round then costs one driver
-    action instead of an eager-checkpoint job plus the probe job; the
-    logical plan is truncated to a LogicalRDD exactly as with `_ckpt`.
-    Only safe where the first job that touches the frame references it
-    once (loop iterates do; shared self-join frames do not — use
-    `_ckpt`). (The temporary R12_CKPT_EAGER A/B knob is gone — r13:
-    the paired measurement is done, lazy won, and an env knob read at
-    import time silently ignored in-process toggling anyway.)"""
-    w = getattr(_NARROW_LOCAL, "width", None)
-    return (df.coalesce(w) if w else df).localCheckpoint(eager=False)
-
 
 def _empty(df: DataFrame) -> bool:
-    """Loop emptiness probe, paired with `_ckpt_lazy`: a FULL count
-    materializes every partition of the lazily-checkpointed frame
-    inside the probe job (a limit(1) take would compute a partition
-    subset and leave the checkpoint fill to a follow-up job, recreating
-    the two-job round). Frontier/iterate frames here are
-    vertex-bounded, so the full count of a frame the round must
-    materialize anyway is not extra work."""
+    """Loop emptiness probe for lazily-checkpointed iterates: a FULL
+    count materializes every partition of the frame inside the probe
+    job (a limit(1) take would compute a partition subset and leave
+    the checkpoint fill to a follow-up job, recreating the two-job
+    round). Frontier/iterate frames here are vertex-bounded, so the
+    full count of a frame the round must materialize anyway is not
+    extra work."""
     return df.count() == 0
-
-
-def _narrowed(fn):
-    """Decorator: run an iterative operator inside _narrow_shuffle —
-    every driver-loop action in the body executes at the narrow width,
-    and the returned frame is localCheckpoint-materialized INSIDE the
-    context (several operators end on a lazy aggregation — closeness,
-    path counts, betweenness; without the checkpoint that last stage
-    would execute after the width is restored)."""
-    import functools
-
-    def _already_materialized(df: DataFrame) -> bool:
-        # an EAGERLY localCheckpointed frame's logical plan is a
-        # LogicalRDD scan over a checkpointed RDD, possibly under
-        # Project/alias wrappers (an operator returning
-        # checkpointed.select(...)) — re-checkpointing that shape would
-        # just copy the materialized partitions again. A LAZILY-marked
-        # frame (`_ckpt_lazy`) is ALSO a LogicalRDD but its RDD is not
-        # yet checkpointed — `rdd.isCheckpointed()` distinguishes the
-        # two (r12 advice: treating any LogicalRDD as materialized let
-        # pagerank-family operators return unmaterialized lazy chains,
-        # which a two-branch caller would recompute per branch).
-        try:
-            node = df._jdf.queryExecution().logical()
-            while True:
-                name = node.getClass().getSimpleName()
-                if name == "LogicalRDD":
-                    return bool(node.rdd().isCheckpointed())
-                if name in ("Project", "SubqueryAlias") and (
-                    node.children().size() == 1
-                ):
-                    node = node.children().head()
-                    continue
-                return False
-        except Exception:
-            return False
-
-    @functools.wraps(fn)
-    def wrapper(graph, *args, **kwargs):
-        with _narrow_shuffle(graph):
-            out = fn(graph, *args, **kwargs)
-            if isinstance(out, DataFrame) and not _already_materialized(out):
-                out = out.transform(_ckpt)
-            return out
-
-    return wrapper
-
 
 
 def _sym_edges(und):
@@ -261,7 +144,6 @@ def triangle_counts(graph: NetGraph) -> DataFrame:
     )
 
 
-@_narrowed
 def connected_components(
     graph: NetGraph,
     max_iters: int = 50,
@@ -290,10 +172,10 @@ def connected_components(
         sym = sym_edges.select("a", "b")
     else:
         und = undirected_edges(graph)
-        sym = _sym_edges(und).transform(_ckpt_lazy)
+        sym = _sym_edges(und).localCheckpoint(eager=False)
     labels = graph.vertices.select(
         "id", F.col("id").alias("component_id")
-    ).transform(_ckpt_lazy)
+    ).localCheckpoint(eager=False)
     # convergence via the MONOTONE label sum: min-labels only ever
     # decrease, so an unchanged Σ ⇔ fixpoint — one scan aggregate per
     # round instead of an anti-join job (decimal accumulation so the
@@ -315,7 +197,7 @@ def connected_components(
                     F.col("component_id"), F.coalesce("nbr", F.col("component_id"))
                 ).alias("component_id"),
             )
-            .transform(_ckpt_lazy)
+            .localCheckpoint(eager=False)
         )
         new_sum = new_labels.agg(
             F.sum(F.col("component_id").cast("decimal(38,0)"))
@@ -327,7 +209,6 @@ def connected_components(
     return labels
 
 
-@_narrowed
 def pagerank(
     graph: NetGraph, iters: int = 4, edges_stable: bool = False
 ) -> DataFrame:
@@ -360,13 +241,13 @@ def pagerank(
     # checkpointed its weighted equivalent)
     outdeg = graph.edges.groupBy(F.col("src").alias("id")).agg(
         F.count("*").alias("out_deg")
-    ).transform(_ckpt)
+    ).localCheckpoint()
     pr = graph.vertices.select(
         "id", F.lit(PR_SCALE // n).cast("long").alias("pr_scaled")
-    ).transform(_ckpt_lazy)
+    ).localCheckpoint(eager=False)
     edges = graph.edges.select("src", "dst")
     if not edges_stable:
-        edges = edges.transform(_ckpt)
+        edges = edges.localCheckpoint()
     for _it in range(iters):
         if _it and _it % 8 == 0:
             # flush the lazy-checkpoint chain every 8 rounds: one cheap
@@ -393,9 +274,9 @@ def pagerank(
                     )
                 ).cast("long").alias("pr_scaled"),
             )
-            .transform(_ckpt_lazy)
+            .localCheckpoint(eager=False)
         )
-    return pr
+    return pr.localCheckpoint()
 
 
 #: local-clustering-coefficient fixed-point scale (parts per million)
@@ -438,7 +319,6 @@ def clustering_coefficient(graph: NetGraph) -> DataFrame:
     )
 
 
-@_narrowed
 def label_propagation(
     graph: NetGraph, rounds: int = 3, sym_edges: DataFrame | None = None
 ) -> DataFrame:
@@ -470,8 +350,8 @@ def label_propagation(
         sym = sym_edges.select("a", "b")
     else:
         und = undirected_edges(graph)
-        sym = _sym_edges(und).transform(_ckpt)
-    labels = graph.vertices.select("id", F.col("id").alias("label")).transform(_ckpt)
+        sym = _sym_edges(und).localCheckpoint()
+    labels = graph.vertices.select("id", F.col("id").alias("label")).localCheckpoint()
     w = Window.partitionBy("a").orderBy(F.col("c").desc(), F.col("label").asc())
     for _ in range(rounds):
         counts = (
@@ -489,7 +369,7 @@ def label_propagation(
             .select(
                 "id", F.coalesce("new_label", F.col("label")).alias("label")
             )
-            .transform(_ckpt)
+            .localCheckpoint()
         )
     return labels.select("id", F.col("label").cast("long").alias("label"))
 
@@ -548,7 +428,6 @@ def link_prediction(
     )
 
 
-@_narrowed
 def ktruss_edges(graph: NetGraph, k: int = 4, rounds: int = 5) -> DataFrame:
     """(a, b): edges of the k-truss — the maximal subgraph where every
     edge is supported by ≥ k−2 triangles — after `rounds` peels. The
@@ -607,12 +486,11 @@ def ktruss_edges(graph: NetGraph, k: int = 4, rounds: int = 5) -> DataFrame:
         prev_n = n
     out = edges.select(
         F.col("a").cast("long").alias("a"), F.col("b").cast("long").alias("b")
-    ).transform(_ckpt)
+    ).localCheckpoint()
     edges.unpersist()
     return out
 
 
-@_narrowed
 def hits_scores(
     graph: NetGraph, rounds: int = 2, edges_stable: bool = False
 ) -> DataFrame:
@@ -637,7 +515,7 @@ def hits_scores(
     and shuffles regardless."""
     edges = graph.edges.select("src", "dst")
     if not edges_stable:
-        edges = edges.transform(_ckpt)
+        edges = edges.localCheckpoint()
     hub = graph.vertices.select("id", F.lit(1).cast("long").alias("hub"))
     auth = None
     for _ in range(rounds):
@@ -650,7 +528,7 @@ def hits_scores(
             graph.vertices.select("id")
             .join(auth, on="id", how="left")
             .select("id", F.coalesce("auth", F.lit(0)).cast("long").alias("auth"))
-            .transform(_ckpt)
+            .localCheckpoint()
         )
         hub = (
             edges.join(auth, on=F.col("dst") == F.col("id"))
@@ -661,9 +539,11 @@ def hits_scores(
             graph.vertices.select("id")
             .join(hub, on="id", how="left")
             .select("id", F.coalesce("hub", F.lit(0)).cast("long").alias("hub"))
-            .transform(_ckpt)
+            .localCheckpoint()
         )
-    return hub.join(auth, on="id").select("id", "hub", "auth")
+    return (
+        hub.join(auth, on="id").select("id", "hub", "auth").localCheckpoint()
+    )
 
 
 def reciprocity(graph: NetGraph) -> DataFrame:
@@ -680,7 +560,7 @@ def reciprocity(graph: NetGraph) -> DataFrame:
         graph.edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .transform(_ckpt)
+        .localCheckpoint()
     )
     mutual = e.join(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
@@ -752,7 +632,6 @@ def degree_histogram(graph: NetGraph) -> DataFrame:
     )
 
 
-@_narrowed
 def bfs_distances(
     graph: NetGraph,
     source: int | None = None,
@@ -782,11 +661,11 @@ def bfs_distances(
         source = graph.vertices.agg(F.min("id")).first()[0]
     edges = graph.edges.select("src", "dst")
     if not edges_stable:
-        edges = edges.distinct().transform(_ckpt_lazy)
+        edges = edges.distinct().localCheckpoint(eager=False)
     frontier = (
         graph.vertices.filter(F.col("id") == source)
         .select("id", F.lit(0).cast("long").alias("dist"))
-        .transform(_ckpt)
+        .localCheckpoint()
     )
     visited = frontier
     for d in range(1, max_iters + 1):
@@ -796,7 +675,7 @@ def bfs_distances(
             .distinct()
             .join(visited, on="id", how="left_anti")
             .select("id", F.lit(d).cast("long").alias("dist"))
-            .transform(_ckpt_lazy)
+            .localCheckpoint(eager=False)
         )
         if _empty(nxt):
             break
@@ -805,10 +684,9 @@ def bfs_distances(
         # rows per round — r12)
         visited = visited.unionAll(nxt)
         frontier = nxt
-    return visited
+    return visited.localCheckpoint()
 
 
-@_narrowed
 def kcore_vertices(
     graph: NetGraph,
     k: int = 3,
@@ -834,7 +712,7 @@ def kcore_vertices(
         active = sym_edges.select("a", "b")
     else:
         und = undirected_edges(graph)
-        active = _sym_edges(und).transform(_ckpt_lazy)
+        active = _sym_edges(und).localCheckpoint(eager=False)
     keep = None
     prev_edges = active.count()
     for _ in range(rounds):
@@ -844,7 +722,7 @@ def kcore_vertices(
             active.join(keep.withColumnRenamed("id", "a"), on="a", how="left_semi")
             .join(keep.withColumnRenamed("id", "b"), on="b", how="left_semi")
             .select("a", "b")
-            .transform(_ckpt_lazy)
+            .localCheckpoint(eager=False)
         )
         n_edges = active.count()
         if n_edges == prev_edges:
@@ -852,10 +730,9 @@ def kcore_vertices(
         prev_edges = n_edges
     if keep is None:  # rounds == 0: degree filter never applied
         keep = active.select(F.col("a").alias("id")).distinct()
-    return keep.select(F.col("id").cast("long").alias("id"))
+    return keep.select(F.col("id").cast("long").alias("id")).localCheckpoint()
 
 
-@_narrowed
 def sssp_distances(
     graph: NetGraph,
     weight: "F.Column | None" = None,
@@ -890,11 +767,11 @@ def sssp_distances(
         weight = (F.col("src") * 7 + F.col("dst")) % 1000
     wedges = graph.edges.select("src", "dst", weight.cast("long").alias("w"))
     if not edges_stable:
-        wedges = wedges.transform(_ckpt_lazy)
+        wedges = wedges.localCheckpoint(eager=False)
     dist = (
         graph.vertices.filter(F.col("id") == source)
         .select("id", F.lit(0).cast("long").alias("d"))
-        .transform(_ckpt_lazy)
+        .localCheckpoint(eager=False)
     )
     # convergence via the monotone (reached-count, Σdist) pair:
     # distances only ever decrease pointwise and the reached set only
@@ -916,7 +793,7 @@ def sssp_distances(
             dist.unionByName(relaxed)
             .groupBy("id")
             .agg(F.min("d").alias("d"))
-            .transform(_ckpt_lazy)
+            .localCheckpoint(eager=False)
         )
         cur = _state(new_dist)
         dist = new_dist
@@ -926,7 +803,6 @@ def sssp_distances(
     return dist.select("id", F.col("d").cast("long").alias("dist_scaled"))
 
 
-@_narrowed
 def personalized_pagerank(
     graph: NetGraph,
     source: int | None = None,
@@ -950,17 +826,17 @@ def personalized_pagerank(
     # checkpointed its weighted equivalent)
     outdeg = graph.edges.groupBy(F.col("src").alias("id")).agg(
         F.count("*").alias("out_deg")
-    ).transform(_ckpt)
+    ).localCheckpoint()
     pr = graph.vertices.select(
         "id",
         F.when(F.col("id") == source, F.lit(PR_SCALE))
         .otherwise(F.lit(0))
         .cast("long")
         .alias("pr_scaled"),
-    ).transform(_ckpt_lazy)
+    ).localCheckpoint(eager=False)
     edges = graph.edges.select("src", "dst")
     if not edges_stable:
-        edges = edges.transform(_ckpt)
+        edges = edges.localCheckpoint()
     for _it in range(iters):
         if _it and _it % 8 == 0:
             # flush the lazy-checkpoint chain every 8 rounds: one cheap
@@ -987,9 +863,9 @@ def personalized_pagerank(
                     )
                 ).cast("long").alias("pr_scaled"),
             )
-            .transform(_ckpt_lazy)
+            .localCheckpoint(eager=False)
         )
-    return pr
+    return pr.localCheckpoint()
 
 
 def _bfs_sym(edges_sym: DataFrame, source: int, max_iters: int) -> DataFrame:
@@ -999,7 +875,7 @@ def _bfs_sym(edges_sym: DataFrame, source: int, max_iters: int) -> DataFrame:
     spark = edges_sym.sparkSession
     frontier = spark.createDataFrame(
         [(source, 0)], "id long, dist long"
-    ).transform(_ckpt_lazy)
+    ).localCheckpoint(eager=False)
     visited = frontier
     for d in range(1, max_iters + 1):
         nxt = (
@@ -1008,7 +884,7 @@ def _bfs_sym(edges_sym: DataFrame, source: int, max_iters: int) -> DataFrame:
             .distinct()
             .join(visited, on="id", how="left_anti")
             .select("id", F.lit(d).cast("long").alias("dist"))
-            .transform(_ckpt_lazy)
+            .localCheckpoint(eager=False)
         )
         if _empty(nxt):
             break
@@ -1020,7 +896,6 @@ def _bfs_sym(edges_sym: DataFrame, source: int, max_iters: int) -> DataFrame:
     return visited
 
 
-@_narrowed
 def diameter_double_sweep(
     graph: NetGraph,
     max_iters: int = 64,
@@ -1045,7 +920,7 @@ def diameter_double_sweep(
         sym = sym_edges.select("a", "b")
     else:
         und = undirected_edges(graph)
-        sym = _sym_edges(und).transform(_ckpt_lazy)
+        sym = _sym_edges(und).localCheckpoint(eager=False)
     seed = graph.vertices.agg(F.min("id")).first()[0]
     d1 = _bfs_sym(sym, seed, max_iters)
     peak = d1.orderBy(F.col("dist").desc(), F.col("id").asc()).first()
@@ -1055,10 +930,9 @@ def diameter_double_sweep(
     return spark.createDataFrame(
         [(seed, peak["id"], peak["dist"], ecc2)],
         "seed long, peak_id long, ecc_seed long, diameter_lb long",
-    )
+    ).localCheckpoint()
 
 
-@_narrowed
 def scc_components(
     graph: NetGraph,
     extra_edges: DataFrame | None = None,
@@ -1133,9 +1007,9 @@ def scc_components(
     e = (
         edges.filter(F.col("src") != F.col("dst"))
         .distinct()
-        .transform(_ckpt)
+        .localCheckpoint()
     )
-    rem = graph.vertices.select("id").transform(_ckpt_lazy)
+    rem = graph.vertices.select("id").localCheckpoint(eager=False)
     spark = graph.vertices.sparkSession
     # assignment accumulator: write-only until the final union — keep
     # the parts in a driver-side LIST of (checkpointed) frames instead
@@ -1147,7 +1021,7 @@ def scc_components(
             e_df.join(rem_df.select(F.col("id").alias("src")), on="src", how="semi")
             .join(rem_df.select(F.col("id").alias("dst")), on="dst", how="semi")
             .select("src", "dst")
-            .transform(_ckpt)
+            .localCheckpoint()
         )
 
     for _ in range(max_outer):
@@ -1174,7 +1048,7 @@ def scc_components(
                 .filter((F.col("has_in") == 1) & (F.col("has_out") == 1))
                 .select("id", F.lit(True).alias("_core"))
             )
-            flagged = rem.join(roles, on="id", how="left").transform(_ckpt_lazy)
+            flagged = rem.join(roles, on="id", how="left").localCheckpoint(eager=False)
             trivial = flagged.filter(F.col("_core").isNull()).select("id")
             if _empty(trivial):
                 break
@@ -1189,7 +1063,9 @@ def scc_components(
         # the MONOTONE color sum: colors only ever increase, so an
         # unchanged Σcolor ⇔ no vertex changed ⇔ fixpoint — one scan
         # aggregate per round instead of an anti-join job.
-        color = rem.select("id", F.col("id").alias("color")).transform(_ckpt_lazy)
+        color = rem.select("id", F.col("id").alias("color")).localCheckpoint(
+            eager=False
+        )
         prev_sum = color.agg(F.sum(F.col("color").cast("decimal(38,0)"))).first()[0]
         color_round = 0
         while True:
@@ -1210,7 +1086,7 @@ def scc_components(
                         F.col("color"), F.coalesce("nbr", F.col("color"))
                     ).alias("color"),
                 )
-                .transform(_ckpt_lazy)
+                .localCheckpoint(eager=False)
             )
             new_sum = newc.agg(F.sum(F.col("color").cast("decimal(38,0)"))).first()[0]
             color = newc
@@ -1231,7 +1107,7 @@ def scc_components(
             )
             .filter(F.col("c") == F.col("c_dst"))
             .select("src", "dst", "c")
-            .transform(_ckpt_lazy)
+            .localCheckpoint(eager=False)
         )
         # members accumulates as a UNION OF CHECKPOINTED PARTS — every
         # part (roots, then each round's preds) is already
@@ -1240,12 +1116,12 @@ def scc_components(
         # the anti-join probe reads the flat union just as well;
         # lineage depth is the union fan-in, bounded by sweep rounds).
         # roots is referenced TWICE by the first sweep job (as members
-        # in the anti-join and as the frontier) — eager `_ckpt`, per
-        # `_ckpt_lazy`'s own referenced-once rule (r12 advice)
+        # in the anti-join and as the frontier) — eager, per the
+        # lazy checkpoint's referenced-once rule (r12 advice)
         roots = (
             color.filter(F.col("id") == F.col("color"))
             .select("id", F.col("color").alias("scc_id"))
-            .transform(_ckpt)
+            .localCheckpoint()
         )
         member_parts = [roots]
         members = roots
@@ -1263,7 +1139,7 @@ def scc_components(
                 .select(F.col("src").alias("id"), "scc_id")
                 .distinct()
                 .join(members, on="id", how="left_anti")
-                .transform(_ckpt_lazy)
+                .localCheckpoint(eager=False)
             )
             if _empty(preds):
                 break
@@ -1271,7 +1147,7 @@ def scc_components(
             members = members.unionAll(preds)
             frontier = preds
         assigned_parts.extend(member_parts)
-        rem = rem.join(members, on="id", how="left_anti").transform(_ckpt)
+        rem = rem.join(members, on="id", how="left_anti").localCheckpoint()
         e = _restrict(e, rem)
     leftover = rem.count()
     if leftover:
@@ -1289,10 +1165,9 @@ def scc_components(
     return assigned.select(
         F.col("id").cast("long").alias("id"),
         F.col("scc_id").cast("long").alias("scc_id"),
-    )
+    ).localCheckpoint()
 
 
-@_narrowed
 def maximal_independent_set(graph: NetGraph, rounds: int = 6) -> DataFrame:
     """(id, mis_round): a maximal independent set of the canonical
     undirected graph via Luby's algorithm (Luby, SICOMP 1986) with
@@ -1318,10 +1193,10 @@ def maximal_independent_set(graph: NetGraph, rounds: int = 6) -> DataFrame:
     from ..functions.hashing import hash56
 
     und = undirected_edges(graph)
-    sym = _sym_edges(und).transform(_ckpt)
+    sym = _sym_edges(und).localCheckpoint()
     rem = graph.vertices.select(
         "id", hash56(F.col("id").cast("string")).alias("pri")
-    ).transform(_ckpt_lazy)
+    ).localCheckpoint(eager=False)
     spark = graph.vertices.sparkSession
     # winners are checkpointed per round; the cumulative MIS is a flat
     # union of those parts (re-checkpointing the union each round
@@ -1348,7 +1223,7 @@ def maximal_independent_set(graph: NetGraph, rounds: int = 6) -> DataFrame:
             .select(F.col("a").alias("id"))
             .distinct()
         )
-        winners = rem.join(blocked, on="id", how="left_anti").transform(_ckpt)
+        winners = rem.join(blocked, on="id", how="left_anti").localCheckpoint()
         mis_parts.append(
             winners.select("id", F.lit(r).cast("long").alias("mis_round"))
         )
@@ -1360,7 +1235,7 @@ def maximal_independent_set(graph: NetGraph, rounds: int = 6) -> DataFrame:
         rem = (
             rem.join(winners, on="id", how="left_anti")
             .join(knocked, on="id", how="left_anti")
-            .transform(_ckpt_lazy)
+            .localCheckpoint(eager=False)
         )
     mis = spark.createDataFrame([], "id long, mis_round long")
     for part in mis_parts:
@@ -1368,10 +1243,9 @@ def maximal_independent_set(graph: NetGraph, rounds: int = 6) -> DataFrame:
     return mis.select(
         F.col("id").cast("long").alias("id"),
         F.col("mis_round").cast("long").alias("mis_round"),
-    )
+    ).localCheckpoint()
 
 
-@_narrowed
 def closeness_sampled(
     graph: NetGraph,
     n_seeds: int = 4,
@@ -1410,7 +1284,7 @@ def closeness_sampled(
         sym = sym_edges.select("a", "b")
     else:
         und = undirected_edges(graph)
-        sym = _sym_edges(und).transform(_ckpt_lazy)
+        sym = _sym_edges(und).localCheckpoint(eager=False)
     spark = graph.vertices.sparkSession
     seeds = [
         int(r["id"])
@@ -1418,7 +1292,7 @@ def closeness_sampled(
     ]
     frontier = spark.createDataFrame(
         [(s, s, 0) for s in seeds], "seed long, id long, dist long"
-    ).transform(_ckpt_lazy)
+    ).localCheckpoint(eager=False)
     visited = frontier
 
     for d in range(1, max_iters + 1):
@@ -1428,7 +1302,7 @@ def closeness_sampled(
             .distinct()
             .join(visited, on=["seed", "id"], how="left_anti")
             .select("seed", "id", F.lit(d).cast("long").alias("dist"))
-            .transform(_ckpt_lazy)
+            .localCheckpoint(eager=False)
         )
         if _empty(nxt):
             break
@@ -1449,10 +1323,10 @@ def closeness_sampled(
             F.sum("dist").cast("long").alias("sum_dist"),
             F.sum(F.expr("1000000 div dist")).cast("long").alias("harmonic_ppm"),
         )
+        .localCheckpoint()
     )
 
 
-@_narrowed
 def path_counts(
     graph: NetGraph,
     source: int | None = None,
@@ -1492,7 +1366,7 @@ def path_counts(
         source = graph.vertices.agg(F.min("id")).first()[0]
     edges = graph.edges.select("src", "dst").distinct()
     if not edges_stable:
-        edges = edges.transform(_ckpt_lazy)
+        edges = edges.localCheckpoint(eager=False)
     frontier = (
         graph.vertices.filter(F.col("id") == source)
         .select(
@@ -1500,7 +1374,7 @@ def path_counts(
             F.lit(0).cast("long").alias("dist"),
             F.lit(1).cast("long").alias("n_paths"),
         )
-        .transform(_ckpt)
+        .localCheckpoint()
     )
     visited = frontier
     for d in range(1, levels + 1):
@@ -1512,7 +1386,7 @@ def path_counts(
             .agg(F.sum("n_paths").alias("n_paths"))
             .join(visited.select("id"), on="id", how="left_anti")
             .select("id", F.lit(d).cast("long").alias("dist"), "n_paths")
-            .transform(_ckpt_lazy)
+            .localCheckpoint(eager=False)
         )
         if _empty(nxt):
             break
@@ -1521,10 +1395,9 @@ def path_counts(
         # rows per round — r12)
         visited = visited.unionAll(nxt)
         frontier = nxt
-    return visited
+    return visited.localCheckpoint()
 
 
-@_narrowed
 def betweenness_sampled(
     graph: NetGraph,
     n_seeds: int = 4,
@@ -1559,7 +1432,7 @@ def betweenness_sampled(
     """
     edges = graph.edges.select("src", "dst").distinct()
     if not edges_stable:
-        edges = edges.transform(_ckpt_lazy)
+        edges = edges.localCheckpoint(eager=False)
     spark = graph.vertices.sparkSession
     seeds = [
         int(r["id"])
@@ -1568,7 +1441,7 @@ def betweenness_sampled(
     frontier = spark.createDataFrame(
         [(s, s, 0, 1) for s in seeds],
         "seed long, id long, dist long, n_paths long",
-    ).transform(_ckpt_lazy)
+    ).localCheckpoint(eager=False)
     visited = frontier
     level_of = {0: frontier}
     max_d = 0
@@ -1582,7 +1455,7 @@ def betweenness_sampled(
             .agg(F.sum("n_paths").alias("n_paths"))
             .join(visited.select("seed", "id"), on=["seed", "id"], how="left_anti")
             .select("seed", "id", F.lit(d).cast("long").alias("dist"), "n_paths")
-            .transform(_ckpt_lazy)
+            .localCheckpoint(eager=False)
         )
         if _empty(nxt):
             break
@@ -1635,20 +1508,23 @@ def betweenness_sampled(
             .select("seed", "id")
             .join(contrib, on=["seed", "id"], how="left")
             .select("seed", "id", F.coalesce("dsum", F.lit(0.0)).alias("delta"))
-            .transform(_ckpt)
+            .localCheckpoint()
         )
     # delta_levels[-1] is level 0 (the seeds themselves) — excluded,
     # matching the dist > 0 convention of Brandes' accumulation
     non_seed = delta_levels[:-1]
     if not non_seed:
-        return spark.createDataFrame([], "id long, betweenness double")
+        return spark.createDataFrame(
+            [], "id long, betweenness double"
+        ).localCheckpoint()
     out = non_seed[0]
     for lv in non_seed[1:]:
         out = out.unionAll(lv)
-    return out.groupBy("id").agg(F.sum("delta").alias("betweenness"))
+    return (
+        out.groupBy("id").agg(F.sum("delta").alias("betweenness")).localCheckpoint()
+    )
 
 
-@_narrowed
 def pagerank_weighted(graph: NetGraph, iters: int = 4) -> DataFrame:
     """(id, pr_scaled): cost-weighted fixed-point PageRank — the
     random surfer follows each out-edge with probability proportional
@@ -1674,15 +1550,15 @@ def pagerank_weighted(graph: NetGraph, iters: int = 4) -> DataFrame:
         "src",
         "dst",
         (F.round(F.col("cost") * 1000).cast("long") + 1).alias("w"),
-    ).transform(_ckpt)
+    ).localCheckpoint()
     # loop-invariant like pagerank's outdeg: materialized once so the
     # per-iteration join does not re-aggregate the weight sums (r12)
     wsum = edges.groupBy(F.col("src").alias("id")).agg(
         F.sum("w").alias("wtot")
-    ).transform(_ckpt)
+    ).localCheckpoint()
     pr = graph.vertices.select(
         "id", F.lit(PR_SCALE // n).cast("long").alias("pr_scaled")
-    ).transform(_ckpt_lazy)
+    ).localCheckpoint(eager=False)
     for _it in range(iters):
         if _it and _it % 8 == 0:
             # lineage flush every 8 rounds — see pagerank (r12 advice)
@@ -1706,9 +1582,9 @@ def pagerank_weighted(graph: NetGraph, iters: int = 4) -> DataFrame:
                     )
                 ).cast("long").alias("pr_scaled"),
             )
-            .transform(_ckpt_lazy)
+            .localCheckpoint(eager=False)
         )
-    return pr
+    return pr.localCheckpoint()
 
 
 def motif_counts(graph: NetGraph) -> DataFrame:
@@ -1731,7 +1607,7 @@ def motif_counts(graph: NetGraph) -> DataFrame:
         graph.edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .transform(_ckpt)
+        .localCheckpoint()
     )
     ab = e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     bc = e.select(F.col("src").alias("b"), F.col("dst").alias("c"))
@@ -1801,7 +1677,7 @@ def neighborhood_features(graph: NetGraph) -> DataFrame:
     keep the float feature engine-reproducible. Vertices with no
     out-edges appear with zeros (left join at the end).
     """
-    e = graph.edges.select("src", "dst").distinct().transform(_ckpt)
+    e = graph.edges.select("src", "dst").distinct().localCheckpoint()
     nbr_attrs = e.join(
         graph.vertices.select(
             F.col("id").alias("dst"),
@@ -1867,7 +1743,7 @@ def hub_attack_robustness(graph: NetGraph, n_remove: int = 10) -> DataFrame:
         deg.orderBy(F.desc("d"), F.asc("id"))
         .limit(n_remove)
         .select("id")
-        .transform(_ckpt)
+        .localCheckpoint()
     )
     vleft = graph.vertices.select("id").join(hubs, on="id", how="left_anti")
     eleft = graph.edges.join(
@@ -2527,7 +2403,7 @@ def local_bridge_census(og: NetGraph, pg: NetGraph) -> DataFrame:
     with ThreadPoolExecutor(max_workers=2) as pool:
         und_og, und_pg = pool.map(
             inheritable_thread_target(
-                lambda g: undirected_edges(g).transform(_ckpt)
+                lambda g: undirected_edges(g).localCheckpoint()
             ),
             (og, pg),
         )
@@ -2644,7 +2520,7 @@ def wedge_closure_by_bucket(graph: NetGraph) -> DataFrame:
     # files, not the post-shuffle distinct), and its vertices 0-fill
     # join is redundant under this function's own left-join+coalesce
     # (r13, guide §7.2 duplicated subtrees).
-    und = undirected_edges(graph).transform(_ckpt)
+    und = undirected_edges(graph).localCheckpoint()
     deg = (
         und.select(F.explode(F.array("a", "b")).alias("id"))
         .groupBy("id")
@@ -2709,7 +2585,7 @@ def directed_triangle_census(og: NetGraph, pg: NetGraph) -> DataFrame:
                 lambda g: g.edges.select("src", "dst")
                 .filter(F.col("src") != F.col("dst"))
                 .distinct()
-                .transform(_ckpt)
+                .localCheckpoint()
             ),
             (og, pg),
         )
@@ -2823,10 +2699,10 @@ def bowtie_census(
     edges = (
         edges.filter(F.col("src") != F.col("dst"))
         .distinct()
-        .transform(_ckpt)
+        .localCheckpoint()
     )
 
-    scc = scc_components(graph, extra_edges=extra_edges).transform(_ckpt_lazy)
+    scc = scc_components(graph, extra_edges=extra_edges).localCheckpoint(eager=False)
     sizes = scc.groupBy("scc_id").agg(F.count("*").alias("n"))
     core_id = sizes.orderBy(F.col("n").desc(), F.col("scc_id").asc()).limit(1)
     # core and edges are consumed by BOTH sweeps (and core is
@@ -2839,7 +2715,7 @@ def bowtie_census(
             F.broadcast(core_id.select("scc_id")), on="scc_id", how="left_semi"
         )
         .select("id")
-        .transform(_ckpt)
+        .localCheckpoint()
     )
 
     def reach(e: DataFrame) -> DataFrame:
@@ -2851,7 +2727,7 @@ def bowtie_census(
                 .select(F.col("dst").alias("id"))
                 .distinct()
                 .join(reached, on="id", how="left_anti")
-                .transform(_ckpt_lazy)
+                .localCheckpoint(eager=False)
             )
             if _empty(nxt):
                 return reached
@@ -2919,7 +2795,6 @@ def scc_size_profile(
     )
 
 
-@_narrowed
 def kcore_census(graph: NetGraph, k: int = 3, rounds: int = 8) -> DataFrame:
     """(n_nodes, n_edges): size of the k-core — the maximal subgraph
     of the undirected simple graph in which every vertex keeps degree
@@ -3011,10 +2886,9 @@ def kcore_census(graph: NetGraph, k: int = 3, rounds: int = 8) -> DataFrame:
     return spark.range(1).select(
         F.lit(n_nodes).cast("long").alias("n_nodes"),
         F.lit(prev_n).cast("long").alias("n_edges"),
-    )
+    ).localCheckpoint()
 
 
-@_narrowed
 def degree_assortativity_inputs(graph: NetGraph) -> DataFrame:
     """(n_edges, s_sum, s_prod, s_sq): Newman degree-assortativity
     sufficient statistics over the undirected simple graph — for every
@@ -3063,10 +2937,9 @@ def degree_assortativity_inputs(graph: NetGraph) -> DataFrame:
         )
         .cast(DEC)
         .alias("s_sq"),
-    )
+    ).localCheckpoint()
 
 
-@_narrowed
 def rich_club_census(graph: NetGraph) -> DataFrame:
     """(degree_bits, n_nodes_ge, n_edges_ge): rich-club sufficient
     statistics at bit-length degree thresholds — for each occupied
@@ -3120,4 +2993,4 @@ def rich_club_census(graph: NetGraph) -> DataFrame:
         F.col("degree_bits").cast("long").alias("degree_bits"),
         F.sum("n_nodes").over(w_ge).cast("long").alias("n_nodes_ge"),
         F.sum("n_edges").over(w_ge).cast("long").alias("n_edges_ge"),
-    )
+    ).localCheckpoint()

@@ -11,6 +11,7 @@ ours live in :mod:`.config`.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -44,7 +45,6 @@ _DEFAULTS = {
     # Self-joins on derived frames are common here (dedup, simrank);
     # let Spark disambiguate instead of erroring.
     "spark.sql.analyzer.failAmbiguousSelfJoinResolution": "false",
-    "spark.sql.shuffle.partitions": "32",
     # Streaming state lives in RocksDB (native memory + local disk),
     # not the default HDFS-backed provider's on-heap maps. Measured at
     # the 100× probe (SCALING.md round 11): session-window state over
@@ -90,10 +90,42 @@ def quiet_window_warns(spark: SparkSession) -> None:
         pass  # cosmetic only; never fail a run over logging
 
 
+def _local_cores(master: str | None) -> int | None:
+    """Cores of a ``local``, ``local[N]`` or ``local[*]`` master; None
+    for any other master."""
+    m = re.fullmatch(r"local(?:\[(\*|\d+)\])?", master or "")
+    if m is None:
+        return None
+    if m[1] is None:
+        return 1
+    return (os.cpu_count() or 1) if m[1] == "*" else int(m[1])
+
+
+def session_conf(
+    master: str | None, extra_conf: dict[str, str] | None = None
+) -> dict[str, str]:
+    """The conf dict `get_spark` builds for `master`.
+
+    Shuffle width is 2 × the local core count: the engine's workloads
+    are driver round-loops of many small jobs, where each shuffle
+    partition is one scheduled task per stage, so width past the cores
+    that run them is pure scheduling cost; two per core leaves room for
+    skewed tasks. A cluster master (or None, i.e. one supplied by
+    spark-submit) gets no width here — there it is a deployment
+    setting. An explicit `extra_conf` width wins.
+    """
+    conf = dict(_DEFAULTS)
+    cores = _local_cores(master)
+    if cores is not None:
+        conf["spark.sql.shuffle.partitions"] = str(2 * cores)
+    if extra_conf:
+        conf.update(extra_conf)
+    return conf
+
+
 def get_spark(
     app_name: str = "big_data_graph_analysis_with_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or get) a SparkSession.
@@ -124,11 +156,6 @@ def get_spark(
                 "spark.driver.extraJavaOptions",
                 "-XX:ReservedCodeCacheSize=512m",
             )
-    conf = dict(_DEFAULTS)
-    if shuffle_partitions is not None:
-        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    if extra_conf:
-        conf.update(extra_conf)
-    for k, v in conf.items():
+    for k, v in session_conf(master, extra_conf).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

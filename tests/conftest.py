@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -7,6 +8,13 @@ import pytest
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+# The test session's heap is the factory's 8g default. Pin it before
+# collection imports bench.py, whose module-level default (24g, for the
+# bench's own process) would otherwise size the test JVM: on a host
+# with less RAM than that, G1 grows toward the cap under allocation
+# churn until the kernel OOM-kills the JVM mid-suite.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
 
 from big_data_graph_analysis_with_spark_spark import get_spark  # noqa: E402
 
@@ -18,12 +26,14 @@ REF_INPUT = "/root/reference/input"
 @pytest.fixture(scope="session")
 def spark():
     # master width is overridable for A/B profiling of the suite
-    # itself; shuffle_partitions stays pinned so plan shapes (and the
+    # itself; the shuffle width stays pinned so plan shapes (and the
     # explicit repartition(N) assertions) are width-independent
-    import os
-
     master = os.environ.get("SPARK_GRAFT_TEST_MASTER", "local[4]")
-    s = get_spark(app_name="tests", master=master, shuffle_partitions=8)
+    s = get_spark(
+        app_name="tests",
+        master=master,
+        extra_conf={"spark.sql.shuffle.partitions": "8"},
+    )
     yield s
 
 

@@ -12,6 +12,8 @@ regression signal.
 import json
 import os
 
+import pytest
+
 import bench
 from big_data_graph_analysis_with_spark_spark.model import NetGraph
 from big_data_graph_analysis_with_spark_spark.operators import graphalg
@@ -71,43 +73,56 @@ def test_prior_timings_without_cpus_reports_none(tmp_path, monkeypatch):
 
 def _tiny_graph(spark):
     v = spark.createDataFrame([(1,), (2,), (3,)], "id LONG")
-    e = spark.createDataFrame([(1, 2), (2, 3)], "src LONG, dst LONG")
+    e = spark.createDataFrame(
+        [(1, 2, 0.5), (2, 3, 1.0)], "src LONG, dst LONG, cost DOUBLE"
+    )
     return NetGraph(v, e)
 
 
 def _is_checkpointed(df):
+    # an eagerly checkpointed frame, possibly under projections (an
+    # operator returning checkpointed.select(...)): a LogicalRDD whose
+    # RDD IS checkpointed — a lazy mark is a LogicalRDD too, but its RDD
+    # is not checkpointed until a job fills it
     node = df._jdf.queryExecution().logical()
+    while node.getClass().getSimpleName() in ("Project", "SubqueryAlias"):
+        node = node.children().head()
     return (
         node.getClass().getSimpleName() == "LogicalRDD"
         and bool(node.rdd().isCheckpointed())
     )
 
 
-def test_narrowed_materializes_lazy_checkpoint_chains(spark):
-    # r12 advice closure (graphalg commit 582d87c): _narrowed must not
-    # treat a _ckpt_lazy frame (LogicalRDD whose RDD is NOT yet
-    # checkpointed) as materialized — operators ending on a lazy chain
-    # must come back eagerly checkpointed, or a two-branch caller
-    # recomputes the whole iteration chain per branch.
-    g = _tiny_graph(spark)
-
-    @graphalg._narrowed
-    def _lazy_tail(graph):
-        return graphalg._ckpt_lazy(graph.vertices)
-
-    out = _lazy_tail(g)
-    assert _is_checkpointed(out), (
-        "_narrowed returned an unmaterialized lazy-checkpoint chain"
-    )
-
-    # an EAGERLY checkpointed result must pass through untouched
-    # (re-checkpointing would copy the materialized partitions again)
-    @graphalg._narrowed
-    def _eager_tail(graph):
-        return graphalg._ckpt(graph.vertices)
-
-    out = _eager_tail(g)
-    assert _is_checkpointed(out)
+@pytest.mark.parametrize(
+    "op",
+    [
+        "connected_components",
+        "pagerank",
+        "label_propagation",
+        "ktruss_edges",
+        "hits_scores",
+        "bfs_distances",
+        "kcore_vertices",
+        "sssp_distances",
+        "personalized_pagerank",
+        "diameter_double_sweep",
+        "scc_components",
+        "maximal_independent_set",
+        "closeness_sampled",
+        "path_counts",
+        "betweenness_sampled",
+        "pagerank_weighted",
+        "kcore_census",
+        "degree_assortativity_inputs",
+        "rich_club_census",
+    ],
+)
+def test_iterative_ops_return_eager_checkpoints(spark, op):
+    # r12 advice closure: an iterative operator must not return an
+    # unmaterialized lazy-checkpoint chain or lazy aggregation tail, or
+    # a two-branch caller recomputes the whole iteration per branch.
+    out = getattr(graphalg, op)(_tiny_graph(spark))
+    assert _is_checkpointed(out), f"{op} returned an unmaterialized frame"
 
 
 def test_prior_timings_rejects_other_sf(tmp_path, monkeypatch):
